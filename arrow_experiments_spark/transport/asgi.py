@@ -21,22 +21,16 @@ form this module never emits ``Transfer-Encoding`` itself.
 
 from __future__ import annotations
 
-import io
 import json
 from urllib.parse import unquote
 
 import pyarrow as pa
 
-from arrow_experiments_spark.transport.ipc_stream import (
-    decode_body,
-    encode_ipc_chunks,
-)
+from arrow_experiments_spark.transport.ipc_stream import encode_ipc_chunks
 from arrow_experiments_spark.transport.multipart import (
     content_type as multipart_content_type,
     encode_multipart,
     make_boundary,
-    parse_multipart,
-    read_arrow_part,
 )
 from arrow_experiments_spark.transport.negotiation import (
     ARROW_STREAM_CONTENT_TYPE,
@@ -47,6 +41,7 @@ from arrow_experiments_spark.transport.server import (
     AVAILABLE_CODINGS,
     AVAILABLE_IPC_CODECS,
     DatasetRegistry,
+    decode_ingest,
     project_reader,
     rebatch_reader,
     resolve_range,
@@ -327,19 +322,12 @@ def make_asgi_app(registry: DatasetRegistry, cors: bool = False, sql_runner=None
         return 200, hdrs, [] if head_only else [data]
 
     def post_ingest(name: str, body: bytes, headers: _Headers):
-        ctype = headers.get("Content-Type", "") or ""
-        meta: dict = {}
         try:
-            if ctype.lower().startswith("multipart/form-data"):
-                parts = parse_multipart(body, ctype)
-                if "application/json" in parts:
-                    meta = json.loads(parts["application/json"][0])
-                    if not isinstance(meta, dict):
-                        raise ValueError("metadata part must be a JSON object")
-                tbl = read_arrow_part(parts)
-            else:
-                coding = headers.get("Content-Encoding", "identity")
-                tbl = decode_body(io.BytesIO(body), coding).read_all()
+            meta, tbl = decode_ingest(
+                body,
+                headers.get("Content-Type") or "",
+                headers.get("Content-Encoding") or "identity",
+            )
         except Exception as e:  # malformed stream / malformed parts
             return _json({"error": str(e)}, status=400)
         registry.register_table(name, tbl, meta=meta or None)

@@ -192,10 +192,11 @@ def decode_body(raw: io.IOBase | bytes, strategy: str) -> pa.ipc.RecordBatchStre
     """Client-side inverse: wrap a response body per strategy.
 
     IPC-codec strategies are transparent (the stream is self-describing);
-    HTTP codings need a CompressedInputStream wrapper.
+    HTTP codings need a CompressedInputStream wrapper.  A ``bytes`` body is
+    read in place (zero-copy): the decoded batches point into it.
     """
     if isinstance(raw, bytes):
-        raw = io.BytesIO(raw)
+        raw = pa.BufferReader(pa.py_buffer(raw))
     if strategy.startswith("identity") or strategy == "":
         return pa.ipc.open_stream(raw)
     codec = "brotli" if strategy == "br" else strategy

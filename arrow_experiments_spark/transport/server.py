@@ -42,7 +42,6 @@ serve-many (reference server.py:552-555) is the registry's caching default.
 
 from __future__ import annotations
 
-import io
 import json
 import re
 import threading
@@ -51,6 +50,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pyarrow as pa
 
+from arrow_experiments_spark.transport import multipart
 from arrow_experiments_spark.transport.ipc_stream import (
     decode_body,
     encode_ipc_chunks,
@@ -500,6 +500,29 @@ def resolve_range(header: str, total: int) -> tuple[int, int] | None:
     return start, end
 
 
+def decode_ingest(
+    body: bytes, content_type: str, content_encoding: str
+) -> tuple[dict, pa.Table]:
+    """Decode a ``POST /ingest`` body into (metadata, table); both server
+    forms call this.
+
+    ``multipart/form-data`` (post_multipart, reference
+    http/post_multipart/README.md:22) carries a JSON metadata part and an
+    Arrow IPC stream part; any other body IS the (optionally content-coded)
+    Arrow IPC stream (post_simple).  The layer functions are looked up on
+    their modules at call time, so a wrapper installed there sees every
+    call.  Raises ValueError (or an Arrow error) on a malformed body."""
+    if not content_type.lower().startswith("multipart/form-data"):
+        return {}, decode_body(body, content_encoding).read_all()
+    parts = multipart.parse_multipart(body, content_type)
+    meta: dict = {}
+    if "application/json" in parts:
+        meta = json.loads(parts["application/json"][0])
+        if not isinstance(meta, dict):
+            raise ValueError("metadata part must be a JSON object")
+    return meta, multipart.read_arrow_part(parts)
+
+
 class ArrowHttpHandler(BaseHTTPRequestHandler):
     registry: DatasetRegistry  # set by serve()
     enable_cors: bool = False
@@ -918,31 +941,23 @@ class ArrowHttpHandler(BaseHTTPRequestHandler):
             self._send_404()
             return
         name = path[len("/ingest/") :]
-        length = int(self.headers.get("Content-Length", "0"))
-        body = self.rfile.read(length)
-        ctype = self.headers.get("Content-Type", "")
-        meta: dict = {}
-        try:
-            if ctype.lower().startswith("multipart/form-data"):
-                # post_multipart (http/post_multipart/README.md:22): JSON
-                # metadata part + Arrow IPC stream part in one form body.
-                from arrow_experiments_spark.transport.multipart import (
-                    parse_multipart,
-                    read_arrow_part,
-                )
-
-                parts = parse_multipart(body, ctype)
-                if "application/json" in parts:
-                    meta = json.loads(parts["application/json"][0])
-                    if not isinstance(meta, dict):
-                        raise ValueError("metadata part must be a JSON object")
-                tbl = read_arrow_part(parts)
+        length = self.headers.get("Content-Length")
+        if length is None or not (length.isascii() and length.isdigit()):
+            # the body's extent is unknown, so the connection cannot be
+            # reused: whatever follows is not a request line
+            self.close_connection = True
+            if length is None:
+                self._send_json({"error": "Content-Length required"}, status=411)
             else:
-                # post_simple: the body IS the (optionally content-coded)
-                # Arrow IPC stream.
-                coding = self.headers.get("Content-Encoding", "identity")
-                reader = decode_body(io.BytesIO(body), coding)
-                tbl = reader.read_all()
+                self._send_json({"error": f"bad Content-Length: {length!r}"}, status=400)
+            return
+        body = self.rfile.read(int(length))
+        try:
+            meta, tbl = decode_ingest(
+                body,
+                self.headers.get("Content-Type", ""),
+                self.headers.get("Content-Encoding", "identity"),
+            )
         except Exception as e:  # malformed stream / malformed parts
             self._send_json({"error": str(e)}, status=400)
             return

@@ -14,6 +14,7 @@ from __future__ import annotations
 import asyncio
 import io
 import json
+import urllib.error
 import urllib.request
 
 import pyarrow as pa
@@ -21,6 +22,7 @@ import pytest
 
 from arrow_experiments_spark.transport.asgi import make_asgi_app
 from arrow_experiments_spark.transport.ipc_stream import decode_body
+from arrow_experiments_spark.transport.multipart import form_data_content_type
 from arrow_experiments_spark.transport.server import DatasetRegistry, serve
 
 
@@ -386,3 +388,81 @@ def test_snapshot_dataset_parity(tmp_path, table):
             assert e.code == 404
     finally:
         httpd.shutdown()
+
+
+def _form_body(table: pa.Table) -> tuple[bytes, str]:
+    """A well-formed POST /ingest form body and its boundary."""
+    from arrow_experiments_spark.transport.multipart import encode_form_data, make_boundary
+
+    boundary = make_boundary()
+    body = b"".join(encode_form_data(boundary, {"k": "v"}, table.schema, table.to_batches()))
+    return body, boundary
+
+
+def _truncated(table) -> tuple[bytes, str]:
+    """The Arrow part is complete; the closing delimiter is missing."""
+    body, boundary = _form_body(table)
+    closing = f"--{boundary}--\r\n".encode()
+    assert body.endswith(closing)
+    return body[: -len(closing)], boundary
+
+
+def _base64_part(table) -> tuple[bytes, str]:
+    """The Arrow part declares a Content-Transfer-Encoding."""
+    from arrow_experiments_spark.transport.negotiation import ARROW_STREAM_CONTENT_TYPE
+
+    body, boundary = _form_body(table)
+    header = f"Content-Type: {ARROW_STREAM_CONTENT_TYPE}\r\n".encode()
+    assert body.count(header) == 1
+    body = body.replace(header, header + b"Content-Transfer-Encoding: base64\r\n")
+    return body, boundary
+
+
+@pytest.mark.parametrize("make_body", [_truncated, _base64_part])
+def test_post_malformed_form_is_400_on_both_forms(app, threaded, table, make_body):
+    """A form body without its closing delimiter, or with a part in a
+    Content-Transfer-Encoding, is refused with 400 by both server forms
+    and registers nothing."""
+    body, boundary = make_body(table)
+    ctype = form_data_content_type(boundary)
+    status, _, doc = asgi_request(
+        app, "POST", "/ingest/malformed", headers={"Content-Type": ctype}, body=body
+    )
+    assert status == 400, doc
+    req = urllib.request.Request(
+        f"{threaded}/ingest/malformed",
+        data=body,
+        headers={"Content-Type": ctype},
+        method="POST",
+    )
+    with pytest.raises(urllib.error.HTTPError) as exc_info:
+        urllib.request.urlopen(req)
+    exc_info.value.close()
+    assert exc_info.value.code == 400
+    status, _, _ = asgi_request(app, "GET", "/datasets/malformed")
+    assert status == 404
+
+
+def test_post_form_ingest_parity(app, threaded, table):
+    """The same form body gives the same acknowledgement from both server
+    forms (one ingest decode behind both)."""
+    body, boundary = _form_body(table)
+    ctype = form_data_content_type(boundary)
+    status, _, doc = asgi_request(
+        app, "POST", "/ingest/form_parity", headers={"Content-Type": ctype}, body=body
+    )
+    assert status == 200
+    req = urllib.request.Request(
+        f"{threaded}/ingest/form_parity",
+        data=body,
+        headers={"Content-Type": ctype},
+        method="POST",
+    )
+    with urllib.request.urlopen(req) as resp:
+        assert json.loads(resp.read()) == json.loads(doc)
+    assert json.loads(doc) == {
+        "name": "form_parity",
+        "rows": table.num_rows,
+        "columns": table.num_columns,
+        "metadata": {"k": "v"},
+    }

@@ -14,6 +14,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from arrow_experiments_spark.transport.negotiation import (
+    ARROW_STREAM_CONTENT_TYPE,
     NotAcceptable,
     choose_content_coding,
     parse_list_header,
@@ -368,3 +369,114 @@ def test_multipart_feed_parse_any_geometry(payloads, chunk):
         else:
             got.setdefault(cur_type, []).append(buf)
     assert got == {k: v for k, v in want.items()}
+
+
+# ---- multipart parsers against the stdlib email parser --------------------
+# Both engine parsers share one delimiter and header grammar, so the parity
+# test above cannot catch a fault in that grammar.  The stdlib feed parser
+# is the independent oracle here; the engine itself does not use it.
+
+_BCHARS = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789-_"
+
+
+@st.composite
+def _multipart_bodies(draw):
+    """(body, content-type header, part count) for a well-formed multipart
+    body with a random boundary, preamble, epilogue and parts whose
+    payloads hold CRLFs, ``--`` runs and prefixes of the delimiter."""
+    boundary = draw(st.text(_BCHARS, min_size=1, max_size=40))
+    dash = b"--" + boundary.encode()
+    delim = b"\r\n" + dash
+    piece = st.one_of(
+        st.binary(max_size=24),
+        st.sampled_from([b"\r\n", b"\r", b"\n", b"--", b"----", b"\r\n--"]),
+        st.integers(0, len(delim) - 1).map(lambda k: delim[:k]),
+    )
+    blob = st.lists(piece, max_size=8).map(b"".join).filter(lambda b: dash not in b)
+
+    def header_name(name):
+        return draw(st.sampled_from([name, name.lower(), name.upper()]))
+
+    ctypes = st.one_of(
+        st.sampled_from(["application", "text", "image", "Application", "TEXT"]).flatmap(
+            lambda main: st.text("abcxyzXYZ0123.+-", min_size=1, max_size=12).map(
+                lambda sub: f"{main}/{sub}"
+            )
+        ),
+        st.sampled_from(
+            [ARROW_STREAM_CONTENT_TYPE, "application/json", "nonsense", ""]
+        ),
+    )
+    params = st.sampled_from(["", "; charset=utf-8", '; name="data"', " ; q=1 ; x=y"])
+    body = b""
+    preamble = draw(blob)
+    if preamble:
+        body += preamble + b"\r\n"
+    n_parts = draw(st.integers(1, 4))
+    for _ in range(n_parts):
+        body += dash + draw(st.sampled_from([b"", b" ", b"\t "])) + b"\r\n"
+        # none (text/plain), one, or a repeated one (the first counts)
+        for _ in range(draw(st.integers(0, 2))):
+            ctype = draw(ctypes) + draw(params)
+            body += f"{header_name('Content-Type')}: {ctype}\r\n".encode()
+        if draw(st.booleans()):
+            body += b'Content-Disposition: form-data; name="f"\r\n'
+        if draw(st.booleans()):
+            cte = draw(st.sampled_from(["7bit", "8bit", "binary", "Binary"]))
+            body += f"{header_name('Content-Transfer-Encoding')}: {cte}\r\n".encode()
+        body += b"\r\n" + draw(blob) + b"\r\n"
+    body += dash + b"--"
+    epilogue = draw(blob)
+    if epilogue:
+        body += b"\r\n" + epilogue
+    ctype_header = draw(st.sampled_from(["multipart/form-data", "multipart/mixed"]))
+    return body, f'{ctype_header}; boundary="{boundary}"', n_parts
+
+
+def _email_oracle(body: bytes, ctype_header: str) -> dict[str, list[bytes]]:
+    from email.parser import BytesFeedParser
+
+    parser = BytesFeedParser()
+    parser.feed(f"Content-Type: {ctype_header}\r\n\r\n".encode())
+    parser.feed(body)
+    msg = parser.close()
+    out: dict[str, list[bytes]] = {}
+    for part in msg.walk():
+        assert not part.defects, part.defects  # the body is well formed
+        if part.is_multipart():
+            continue
+        out.setdefault(part.get_content_type(), []).append(part.get_payload(decode=True))
+    return out
+
+
+@settings(max_examples=300, deadline=None)
+@given(case=_multipart_bodies(), chunk=st.integers(min_value=1, max_value=97))
+def test_multipart_parsers_match_email_oracle(case, chunk):
+    """``parse_multipart`` and the streamed ``iter_multipart_events`` both
+    give exactly what the stdlib ``email`` parser gives: the same parts,
+    keyed by ``get_content_type()``, with the same payload bytes."""
+    import email.message
+
+    from arrow_experiments_spark.transport.multipart import (
+        iter_multipart_events,
+        parse_multipart,
+    )
+
+    body, ctype, n_parts = case
+    want = _email_oracle(body, ctype)
+    assert sum(map(len, want.values())) == n_parts
+    assert parse_multipart(body, ctype) == want
+
+    chunks = [body[i : i + chunk] for i in range(0, len(body), chunk)]
+    got: dict[str, list[bytes]] = {}
+    for kind, payload in iter_multipart_events(iter(chunks), ctype):
+        if kind == "begin":
+            m = email.message.Message()
+            for name, value in payload.items():
+                m[name] = value
+            buf = b""
+        elif kind == "data":
+            buf += payload
+        else:
+            got.setdefault(m.get_content_type(), []).append(buf)
+    assert got == want
